@@ -11,11 +11,12 @@ from __future__ import annotations
 
 import numpy as np
 
-from qfilter import codecs, imageops
-from qfilter.engine import ocr_features
+from qfilter import codecs
 from qfilter.textops import TextBundle, default_bundle
 
+from .captionfeat import ocr_features
 from .cascades import categorize_extended, is_dark_document, keep
+from .imagefeat import IMAGE_FEATURE_NAMES, image_features
 
 __all__ = ["assess_row", "label_rows"]
 
@@ -31,11 +32,11 @@ def assess_row(row: dict, bundle: TextBundle | None = None) -> dict:
     out: dict = {"image_id": row["image_id"]}
 
     error = None
-    feats: dict = dict.fromkeys(imageops.IMAGE_FEATURE_NAMES, 0.0)
+    feats: dict = dict.fromkeys(IMAGE_FEATURE_NAMES, 0.0)
     feats["is_table_like"] = False
     try:
         px = codecs.decode(row["bytes"], row["fmt"], row["w"], row["h"])
-        feats = imageops.image_features(px)
+        feats = image_features(px)
     except Exception as exc:  # noqa: BLE001 — mirror reference error channel
         error = f"{type(exc).__name__}: {exc}"
 

@@ -11,12 +11,16 @@ pipeline over a columnar table of image+caption rows:
 Modules
 -------
 codecs     : raw/bmp/png/qjpg image encode+decode (numpy + zlib)
-imageops   : numpy pixel kernels (blur score, ROI, density, skew, ...)
-phash      : 64-bit average hash
+imageops   : shared scalar pixel primitives (gray, median, Otsu,
+             threshold, morphology, connected components)
+batch_image: the image feature path — shape-batched pixel kernels +
+             64-bit average hash
+batch_text : the caption feature path — batch-vectorized OCR-analogue
+             confidences/geometry, langid, perplexity, heuristics
 textops    : tokenizer, heuristics, langid, n-gram LM, PII/tox scrub
-engine     : deterministic caption-path OCR-analogue feature engine
+engine     : OCR-analogue contract: calibration constants + geometry
 cascade    : the reference decision cascades as pure Column expressions
-features   : Arrow-batched UDF stages (mapInArrow / pandas_udf)
+features   : Arrow-batched UDF stages (pandas_udf)
 dedup      : salted two-phase pHash dedup
 pipeline   : stage graph + lineage/metrics + resume-from-checkpoint
 catalog    : thin Iceberg-style parquet table layer

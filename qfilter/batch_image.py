@@ -1,25 +1,24 @@
-"""Shape-batched image feature kernels — the e2e hot path.
+"""Shape-batched image feature kernels — the package's only image-feature path.
 
-`imageops.image_features` + `phash.average_hash` cost ~5 ms/image
-run one image at a time; an Arrow batch of 64 fixture images spans
-only a handful of distinct (h, w) shapes, so this module groups a
-batch by shape, stacks each group into one ``(n, h, w)`` ndarray, and
-runs every kernel ONCE per shape-group.  Per-image Python/numpy
-dispatch overhead (dozens of tiny ufunc calls per image) collapses
-into a few large array ops.
+An Arrow batch of 64 fixture images spans only a handful of distinct
+(h, w) shapes, so `image_features_batch` groups a batch by shape,
+stacks each group into one ``(n, h, w)`` ndarray, and runs every
+kernel ONCE per shape-group.  Per-image Python/numpy dispatch overhead
+(dozens of tiny ufunc calls per image) collapses into a few large
+array ops.  The result is one column array per feature, in input
+order, which the image UDF (`qfilter.features.image_features_frame`)
+scatters straight into its output frame.
 
-Bit-identity contract: every value equals the scalar path
-(`imageops` / `phash`) EXACTLY — same integer arithmetic, same
-reduction orders.  The batched forms reuse the scalar code's exact
-expressions over a leading batch axis; the only reductions that feed
-float rounding (var/std/mean) are evaluated per-image on the
-contiguous ``stack[i]`` slice, which holds the same values in the
-same memory order as the scalar call, so numpy's pairwise summation
-blocks identically.  Connected-components (data-dependent run lists)
-stays per-image — it is irreducibly per-image and not the dominant
-cost.  Parity is enforced by tests/test_batch_image.py over every
-fixture image, and the scalar path remains the independently-coded
-oracle twin (the `batch_text` vs `engine` pattern).
+Bit-identity contract: every value equals the scalar twin
+(`oracle/imagefeat.py`) EXACTLY — same integer arithmetic, same
+reduction orders.  The only reductions that feed float rounding
+(var/std/mean) are evaluated per-image on the contiguous ``stack[i]``
+slice, which holds the same values in the same memory order as the
+scalar call, so numpy's pairwise summation blocks identically.
+Connected components (data-dependent run lists) run as one banded
+union-find per group.  Parity is enforced by tests/test_batch_image.py
+over every fixture image and by tests/test_properties.py on arbitrary
+shapes.
 
 Reference: the per-page metric loop in
 `classificator_extended_paddleocr.py:368-512` (what to compute);
@@ -30,7 +29,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import imageops
 from .imageops import connected_component_stats
 
 __all__ = ["image_features_batch"]
@@ -73,9 +71,10 @@ def grayscale_b(px: np.ndarray) -> np.ndarray:
     for i in range(0, n, step):
         c = px[i : i + step]
         # in-place accumulation (one f64 temporary instead of four);
-        # the clip of the scalar path is provably redundant: round(luma)
-        # lies in [0, 255] for every RGB triple (exhaustive check in
-        # tests/test_batch_image.py), so uint8 assignment is exact
+        # the clip of the scalar path is redundant: round(luma) lies in
+        # [0, 255] for every RGB triple (exhaustive check in
+        # tests/test_batch_image.py::test_luma_range_exhaustive), so
+        # uint8 assignment is exact
         f = c[..., 0] * 0.299
         f += c[..., 1] * 0.587
         f += c[..., 2] * 0.114
@@ -97,7 +96,7 @@ def _hist256_b(gray: np.ndarray) -> np.ndarray:
 
 
 def brightness_stats_b(gray: np.ndarray):
-    """Batched `imageops.brightness_stats`: (mean, median, contrast,
+    """Batched `oracle.imagefeat.brightness_stats`: (mean, median, contrast,
     %<100, %<50) arrays.  Histogram stats are exact integer math;
     std runs per-image on the contiguous slice (same reduction order
     as the scalar call)."""
@@ -121,19 +120,17 @@ def brightness_stats_b(gray: np.ndarray):
 
 
 def binomial5_blur_b(gray: np.ndarray) -> np.ndarray:
-    """Batched `imageops.binomial5_blur` (identical integer conv).
+    """Separable [1,4,6,4,1]/16 blur ~= cv2.GaussianBlur(5,5,0) over a
+    stack (twin: `oracle.imagefeat.binomial5_blur`).
 
-    uint16 throughout (r5): the vertical pass peaks at 16*255 = 4080
-    and the horizontal at 16*4080 = 65280 < 2^16, so every
-    intermediate fits uint16 exactly — the int32 form moved 2x the
-    bytes through the same arithmetic (the 8->32 scaling ask).
+    uint16 throughout: the vertical pass peaks at 16*255 = 4080 and
+    the horizontal at 16*4080 = 65280 < 2^16, so every intermediate
+    fits uint16 exactly, at half the bytes of an int32 form.
 
-    r6: each (1,4,6,4,1) tap is evaluated as four cascaded two-tap
-    adds ((1,1)^4 — binomial factorization, exact integer algebra,
-    asserted in tests/test_batch_image.py), replacing 4 adds + 2
-    scalar multiplies per axis with 4 adds; and the final banker's
-    rounding of o/256 is the branch-free shift form
-    (o + 127 + ((o>>8)&1)) >> 8 — equal to the divmod form for every
+    Each (1,4,6,4,1) tap is evaluated as four cascaded two-tap adds
+    ((1,1)^4 — binomial factorization, exact integer algebra), and the
+    final banker's rounding of o/256 is the branch-free shift form
+    (o + 127 + ((o>>8)&1)) >> 8 — equal to round-half-even for every
     o in [0, 65280] (exhaustive test), with no bool temporaries.
     o + 128 <= 65408 < 2^16, so the add cannot wrap."""
     n, h, w = gray.shape
@@ -176,7 +173,7 @@ def median3_b(gray: np.ndarray) -> np.ndarray:
     p = _pad_edge_b(gray, 1, 1, 1, 1)
     v = [p[:, y : y + h, x : x + w] for y in range(3) for x in range(3)]
 
-    # exchange with buffer recycling (r6): slots start as views into
+    # exchange with buffer recycling: slots start as views into
     # the padded plane (not writable targets); once a slot owns an
     # array, a replaced array returns to a small pool and becomes the
     # next exchange's output buffer — ~10 allocations for the 19
@@ -242,11 +239,11 @@ def _eprefix_rows(p: np.ndarray, dtype) -> np.ndarray:
 
 def box_sums_shared_b(gray: np.ndarray, blocks: tuple[int, ...]) -> dict:
     """Batched integer window SUMS for several odd block sizes
-    (`imageops._box_means_shared` without the float division — the
-    adaptive-threshold consumer compares in integer space, so the
+    (`oracle.imagefeat._box_means_shared` without the float division —
+    the adaptive-threshold consumer compares in integer space, so the
     float64 means array never needs to exist).
 
-    Two exact strategies (r6), picked by call shape:
+    Two exact strategies, picked by call shape:
     * single block — separable "transpose sandwich": uint16 exclusive
       row-prefix + window diff vertically, transpose, int32 row-prefix
       + diff horizontally, transpose back.  Both scans run on the fast
@@ -282,16 +279,11 @@ def box_sums_shared_b(gray: np.ndarray, blocks: tuple[int, ...]) -> dict:
 
 
 def adaptive_threshold_inv_b(
-    gray: np.ndarray,
-    block: int,
-    c: float,
-    _sums: np.ndarray | None = None,
-    consume: bool = False,
-    binary01: bool = False,
+    gray: np.ndarray, block: int, c: float, _sums: np.ndarray | None = None
 ) -> np.ndarray:
-    """BINARY_INV adaptive threshold, integer form.
+    """BINARY_INV adaptive threshold, integer form, as a 0/1 mask.
 
-    Scalar form: 255 where px <= window_sum/b^2 - c.  With integer
+    Scalar form: set where px <= window_sum/b^2 - c.  With integer
     window sums s and integer c*b^2 this is equivalent to
     px*b^2 <= s - c*b^2 in EXACT arithmetic; the float64 rounding of
     s/b^2 - c (error ~1e-13) cannot flip the comparison because the
@@ -300,151 +292,28 @@ def adaptive_threshold_inv_b(
     reachable window sum at each call-site (block, c) pair in
     tests/test_batch_image.py.
 
-    With ``consume`` (or when the sums are computed here), the sums
-    buffer is transformed IN PLACE into the per-pixel threshold
-    t = floor((s - c*b^2) / b^2) — for integers, px*b^2 <= s - c*b^2
-    iff px <= t (floor division by the positive b^2) — and the final
-    compare runs uint8-vs-int32 through numpy's buffered casting: no
-    full-plane int32 `gray * b^2` temporary ever exists (r5, the
-    8->32 scaling ask).  numpy's scalar integer division is SIMD
-    (npyv divisor), so the floordiv costs what the multiply did."""
+    The sums buffer (``_sums``, a `box_sums_shared_b` entry the caller
+    hands over, or computed here) is transformed IN PLACE into the
+    per-pixel threshold t = floor((s - c*b^2) / b^2) — for integers,
+    px*b^2 <= s - c*b^2 iff px <= t (floor division by the positive
+    b^2) — and the final compare runs uint8-vs-int32 through numpy's
+    buffered casting: no full-plane int32 `gray * b^2` temporary ever
+    exists."""
     cb2 = c * block * block
     assert cb2 == int(cb2), "integer-form adaptive threshold needs integral c*b^2"
-    if _sums is None:
-        s = box_sums_shared_b(gray, (block,))[block]
-        consume = True
-    else:
-        s = _sums
-    if consume:
-        np.subtract(s, int(cb2), out=s)
-        np.floor_divide(s, block * block, out=s)
-        if binary01:
-            return (gray <= s).view(np.uint8)
-        return (gray <= s).view(np.uint8) * np.uint8(255)
-    lhs = gray.astype(s.dtype) * (block * block)
-    if binary01:
-        return (lhs <= s - int(cb2)).view(np.uint8)
-    return ((lhs <= s - int(cb2)) * 255).astype(np.uint8)
+    s = box_sums_shared_b(gray, (block,))[block] if _sums is None else _sums
+    np.subtract(s, int(cb2), out=s)
+    np.floor_divide(s, block * block, out=s)
+    return (gray <= s).view(np.uint8)
 
 
-def _axis_count_u8(b: np.ndarray, k: int, axis: int, vmax: int = 255) -> np.ndarray:
-    """Centered k-window sums of a uint8 stack along one image axis,
-    edge-padded; the window sum fits uint8 at every call site
-    (k * vmax <= 255, asserted by the caller's kh*kw <= 255 gate).
-
-    Two regimes (r5, the 8->32 scaling ask):
-    * k <= 15: k shifted adds — the group stacks are L2/L3-resident
-      at Arrow-batch sizes, so contiguous uint8 adds are faster than
-      a strided cumsum up to k ~ 15 (measured: the cumsum loses 3x
-      at k=15 and only wins from k ~ 40).
-    * k > 15: one cumsum along the axis + a shifted-view subtract —
-      O(1) bytes/px instead of O(k); the 1x40 / 40x1 line kernels
-      were paying 39 full-plane adds (measured 1.3x).
-      The cumsum dtype is the smallest that holds the FULL-axis
-      prefix sum (plen * vmax — `vmax` is the caller's bound on the
-      input values: 1 for the first 0/1 pass, kh for the second pass
-      over first-pass counts), so small images stay uint8/uint16.
-      Window count = cs[i+k] - cs[i] is exact integer math (the
-      prefix sums are monotone, so even the narrow dtypes never
-      wrap) — bit-identical to the add chain."""
-    def _cum_dtype(plen: int):
-        peak = plen * vmax
-        if peak <= 255:
-            return np.uint8
-        if peak <= 65535:
-            return np.uint16
-        return np.int64
-    if axis == 1:
-        ph = k // 2
-        p = _pad_edge_b(b, ph, k - 1 - ph, 0, 0)
-        h = b.shape[1]
-        if k <= 15:
-            out = p[:, :h].copy()
-            for d in range(1, k):
-                out += p[:, d : d + h]
-            return out
-        plen = p.shape[1]
-        dt = _cum_dtype(plen)
-        cs = np.zeros((p.shape[0], plen + 1, p.shape[2]), dtype=dt)
-        np.cumsum(p, axis=1, dtype=dt, out=cs[:, 1:])
-        return (cs[:, k : k + h] - cs[:, :h]).astype(np.uint8, copy=False)
-    pw = k // 2
-    p = _pad_edge_b(b, 0, 0, pw, k - 1 - pw)
-    w = b.shape[2]
-    if k <= 15:
-        out = p[:, :, :w].copy()
-        for d in range(1, k):
-            out += p[:, :, d : d + w]
-        return out
-    plen = p.shape[2]
-    dt = _cum_dtype(plen)
-    cs = np.zeros((p.shape[0], p.shape[1], plen + 1), dtype=dt)
-    np.cumsum(p, axis=2, dtype=dt, out=cs[:, :, 1:])
-    return (cs[:, :, k : k + w] - cs[:, :, :w]).astype(np.uint8, copy=False)
-
-
-def _window_count_b(
-    binary: np.ndarray, kh: int, kw: int, is01: bool = False
-) -> np.ndarray:
-    """Batched `imageops._window_count` — exact integer counts via
-    separable uint8 passes (window count = vertical count then
-    horizontal sum of counts; kh*kw <= 255 at every call site, checked,
-    so both passes stay uint8).  Larger kernels fall back to the int32
-    integral pair.
-
-    ``is01``: the caller guarantees a uint8 0/1 plane (the internal
-    morphology pipeline), skipping the ``!= 0`` normalization pass —
-    window counts over 0/1 equal counts over the 0/255 form exactly."""
-    b = binary if is01 else (binary != 0).view(np.uint8)
-    if kh * kw <= 255:
-        out = b
-        if kh > 1:
-            out = _axis_count_u8(out, kh, 1, vmax=1)
-        if kw > 1:
-            out = _axis_count_u8(out, kw, 2, vmax=kh)
-        return out
-    n, h, w = binary.shape
-    ph, pw = kh // 2, kw // 2
-    p = _pad_edge_b(b, ph, kh - 1 - ph, pw, kw - 1 - pw)
-    ii = _double_cumsum_b(p, np.int32)
-    s = (
-        ii[:, kh:, kw:]
-        - ii[:, :-kh, kw:]
-        - ii[:, kh:, :-kw]
-        + ii[:, :-kh, :-kw]
-    )
-    return s[:, :h, :w]
-
-
-def erode_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    if kh <= 1 and kw <= 1:
-        return binary
-    return (_window_count_b(binary, kh, kw) == kh * kw) * np.uint8(255)
-
-
-def dilate_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    if kh <= 1 and kw <= 1:
-        return binary
-    return (_window_count_b(binary, kh, kw) > 0) * np.uint8(255)
-
-
-def morph_open_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    return dilate_b(erode_b(binary, kh, kw), kh, kw)
-
-
-def morph_close_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    return erode_b(dilate_b(binary, kh, kw), kh, kw)
-
-
-# 0/1-plane morphology (r6): the feature pipeline only ever consumes
-# masks through `count_nonzero` or connected components (`!= 0`), so
-# the 0/255 convention of the public kernels above is wasted work
-# internally — each erode/dilate paid a `* 255` materialization and
-# the next `_window_count_b` paid a `!= 0` to undo it.  These internal
-# forms keep everything uint8 0/1 end to end: identical nonzero
-# patterns (a window count over 0/1 equals the count over 0/255), so
-# every downstream value is bit-identical — asserted against the
-# scalar `imageops` path by tests/test_batch_image.py.
+# 0/1-plane morphology: the feature pipeline only ever consumes masks
+# through `count_nonzero` or connected components (`!= 0`), so the
+# 0/255 convention of the scalar `imageops` kernels would be wasted
+# work here.  These forms keep everything uint8 0/1 end to end: the
+# nonzero patterns equal those of the 0/255 scalar kernels, so every
+# downstream value is bit-identical — asserted against the scalar twin
+# by tests/test_batch_image.py.
 
 def _axis_win01(p: np.ndarray, k: int, axis: int, op) -> np.ndarray:
     """Sliding-window OR/AND of length k along one axis of a
@@ -502,8 +371,7 @@ def laplacian_variance_b(gray: np.ndarray) -> np.ndarray:
     values, same memory order as the scalar `lap.var()`)."""
     n, h, w = gray.shape
     # pad the uint8 plane (1 byte/px) and widen once; the center view
-    # of the padded plane replaces the separate int16 copy of gray —
-    # same values, one less full-plane temporary (r6)
+    # of the padded plane serves as the int16 copy of gray
     p = _pad_edge_b(gray, 1, 1, 1, 1).astype(np.int16)
     g = p[:, 1:-1, 1:-1]
     lap = (
@@ -514,7 +382,7 @@ def laplacian_variance_b(gray: np.ndarray) -> np.ndarray:
 
 
 def average_hash_b(gray: np.ndarray) -> np.ndarray:
-    """Batched `phash.average_hash` over a same-shape gray stack.
+    """Batched `oracle.imagefeat.average_hash` over a same-shape gray stack.
 
     The 8x8 cell index grid depends only on (h, w), so it is computed
     ONCE with the scalar code's exact clamping logic and gathered for
@@ -552,7 +420,7 @@ def average_hash_b(gray: np.ndarray) -> np.ndarray:
         # cells tile the plane exactly (every h, w >= 8): sum each
         # cell directly with two reduceat passes — same exact integer
         # sums as the integral-difference form, without allocating and
-        # double-cumsumming the (n, h+1, w+1) int32 integral (r6)
+        # double-cumsumming the (n, h+1, w+1) int32 integral
         acc = np.int32 if h * w * 255 < 2**31 else np.int64
         rows = np.add.reduceat(gray.astype(acc), y0g, axis=1)
         cells = np.add.reduceat(rows, x0g, axis=2) / areas  # (n, 8, 8)
@@ -573,10 +441,8 @@ def average_hash_b(gray: np.ndarray) -> np.ndarray:
 def _cc_stats_batch(masks: np.ndarray) -> list:
     """Component stats for every image of a (n, h, w) 0/1 stack via
     ONE union-find: the stack is viewed as one (n*h, w) plane (a
-    zero-copy reshape — r6; CC's band_h logic bars runs in a band's
-    first row from matching the previous band's last row, which is
-    what the old blank separator rows achieved with an extra
-    allocate-and-copy of the whole stack), run once through
+    zero-copy reshape; CC's band_h logic bars runs in a band's first
+    row from matching the previous band's last row), run once through
     `connected_component_stats(band_h=h)`, and the result is sliced
     back per image by its band index.  y statistics come back in
     band-local coordinates, bit-identical to a per-image call (same
@@ -584,7 +450,7 @@ def _cc_stats_batch(masks: np.ndarray) -> list:
     Returns a list of n per-image stats dicts (None where empty)."""
     n, h, w = masks.shape
     tall = np.ascontiguousarray(masks).reshape(n * h, w)
-    # every caller now passes 0/1 masks (the r6 binary pipeline)
+    # every caller passes 0/1 masks
     st = connected_component_stats(tall, band_h=h, assume01=True)
     out: list = [None] * n
     if st is None:
@@ -602,14 +468,13 @@ def _cc_stats_batch(masks: np.ndarray) -> list:
 # --------------------------------------------- per-shape-group driver
 
 def _roi_crop_b(gray: np.ndarray):
-    """Batched `imageops.crop_roi`: blur/Otsu/threshold batched, the
-    component scan per image (data-dependent).  Returns
+    """Batched `oracle.imagefeat.crop_roi`: blur/Otsu/threshold
+    batched, one banded component scan per group.  Returns
     (list_of_cropped_arrays, roi_frac array)."""
     n, h, w = gray.shape
     blur = binomial5_blur_b(gray)
     ts = otsu_threshold_b(blur)
-    # 0/1 mask straight into CC (it keys on `!= 0`): the 0/255
-    # materialization pass of the r5 form carried no information
+    # 0/1 mask straight into CC (it keys on `!= 0`)
     th = (blur > ts[:, None, None]).view(np.uint8)
     cropped = []
     fracs = np.empty(n)
@@ -639,8 +504,8 @@ def _roi_crop_b(gray: np.ndarray):
 
 def _cropped_group_features(c3: np.ndarray) -> dict:
     """All cropped-plane features for one same-shape stack; returns
-    dict of per-image arrays, mirroring `imageops.image_features`'s
-    cropped-path calls exactly."""
+    dict of per-image arrays, mirroring the cropped-path calls of
+    `oracle.imagefeat.image_features` exactly."""
     n, h, w = c3.shape
     out = {}
     out["avg_blur"] = laplacian_variance_b(c3)
@@ -649,18 +514,15 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
     sums = box_sums_shared_b(med, (35, 41))
 
     # text_density: adaptive INV (35, 15) -> open 3x3 -> ink fraction
-    # (each sums entry is single-use -> consume in place; 0/1 masks
-    # throughout — count_nonzero and CC see identical patterns)
-    thr = adaptive_threshold_inv_b(
-        med, 35, 15, _sums=sums.pop(35), consume=True, binary01=True
-    )
+    # (each sums entry is single-use, so the threshold consumes it)
+    thr = adaptive_threshold_inv_b(med, 35, 15, _sums=sums.pop(35))
     thr = _open01(thr, 3, 3)
     out["text_density"] = (
         np.count_nonzero(thr.reshape(n, -1), axis=1) / float(h * w)
     )
 
     # is_table_like: adaptive INV (31, 10) -> open 1x40 / 40x1
-    thr_t = adaptive_threshold_inv_b(c3, 31, 10, binary01=True)
+    thr_t = adaptive_threshold_inv_b(c3, 31, 10)
     h_lines = _open01(thr_t, 1, 40)
     v_lines = _open01(thr_t, 40, 1)
     frac = (
@@ -673,9 +535,7 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
     # adaptive INV (31, 11), dilate (3, kw), per-image components
     m = int(min(h, w) * 0.06)
     roi = c3[:, m : h - m, m : w - m] if min(h, w) - 2 * m > 4 else c3
-    thr_s = adaptive_threshold_inv_b(
-        np.ascontiguousarray(roi), 31, 11, binary01=True
-    )
+    thr_s = adaptive_threshold_inv_b(np.ascontiguousarray(roi), 31, 11)
     kw = max(20, roi.shape[2] // 50)
     lines = _dilate01(thr_s, 3, kw)
     area_min = roi.shape[1] * roi.shape[2] * 3e-4
@@ -694,8 +554,9 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
         if not keep.any():
             skew[i] = 0.0
             continue
-        # vectorized `_component_angle_deg` — identical elementwise
-        # float ops per component, so bit-identical to the scalar loop
+        # vectorized `oracle.imagefeat._component_angle_deg` — identical
+        # elementwise float ops per component, so bit-identical to the
+        # scalar loop
         na = st["area"][keep]
         mx = st["sum_x"][keep] / na
         my = st["sum_y"][keep] / na
@@ -708,9 +569,7 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
 
     # core_content_fraction: adaptive INV (41, 15) -> close 15x15 ->
     # largest component area fraction (single close: idempotent)
-    thr_c = adaptive_threshold_inv_b(
-        med, 41, 15, _sums=sums.pop(41), consume=True, binary01=True
-    )
+    thr_c = adaptive_threshold_inv_b(med, 41, 15, _sums=sums.pop(41))
     merged = _close01(thr_c, 15, 15)
     core = np.empty(n)
     merged_stats = _cc_stats_batch(merged)
@@ -723,16 +582,27 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
     return out
 
 
-def image_features_batch(pxs: list) -> list[dict]:
-    """Features + phash for a list of decoded images (any mix of
-    shapes, RGB or gray).  Returns one dict per input, in input order,
-    with the keys of `imageops.IMAGE_FEATURE_NAMES` + ``phash64``.
+_FLOAT_FEATURES = (
+    "roi_frac", "avg_blur", "text_density", "avg_skew_deg", "core_frac",
+    "mean_brightness", "median_brightness", "contrast",
+    "dark_pixels_percent", "very_dark_pixels_percent",
+)
 
-    Bit-identical to `imageops.image_features(px)` +
-    `phash.average_hash(px)` per image (tests/test_batch_image.py).
+
+def image_features_batch(pxs: list) -> dict[str, np.ndarray]:
+    """Features + phash for a list of decoded images (any mix of
+    shapes, RGB or gray).  Returns one array per column — the float64
+    features, bool ``is_table_like`` and int64 ``phash64`` — each in
+    input order.
+
+    Bit-identical to `oracle.imagefeat.image_features(px)` +
+    `oracle.imagefeat.average_hash(px)` per image
+    (tests/test_batch_image.py).
     """
     n = len(pxs)
-    results: list[dict | None] = [None] * n
+    out = {name: np.empty(n) for name in _FLOAT_FEATURES}
+    out["is_table_like"] = np.empty(n, dtype=bool)
+    out["phash64"] = np.empty(n, dtype=np.int64)
 
     groups: dict[tuple, list[int]] = {}
     for i, p in enumerate(pxs):
@@ -740,33 +610,23 @@ def image_features_batch(pxs: list) -> list[dict]:
 
     # stage 1 per full-shape group: gray + brightness + phash + ROI crop
     cropped_by_shape: dict[tuple, list[int]] = {}
-    cropped_arrays: list[np.ndarray | None] = [None] * n
-    for shape, idxs in groups.items():
+    cropped_arrays: list = [None] * n
+    for idxs in groups.values():
         g3 = grayscale_b(np.stack([pxs[i] for i in idxs]))
-        mean_b, median_b, contrast, dark, very_dark = brightness_stats_b(g3)
-        ph = average_hash_b(g3)
-        cropped, fracs = _roi_crop_b(g3)
-        for k, i in enumerate(idxs):
-            results[i] = {
-                "roi_frac": float(fracs[k]),
-                "mean_brightness": float(mean_b[k]),
-                "median_brightness": float(median_b[k]),
-                "contrast": float(contrast[k]),
-                "dark_pixels_percent": float(dark[k]),
-                "very_dark_pixels_percent": float(very_dark[k]),
-                "phash64": int(ph[k]),
-            }
-            cropped_arrays[i] = cropped[k]
-            cropped_by_shape.setdefault(cropped[k].shape, []).append(i)
+        (
+            out["mean_brightness"][idxs], out["median_brightness"][idxs],
+            out["contrast"][idxs], out["dark_pixels_percent"][idxs],
+            out["very_dark_pixels_percent"][idxs],
+        ) = brightness_stats_b(g3)
+        out["phash64"][idxs] = average_hash_b(g3)
+        cropped, out["roi_frac"][idxs] = _roi_crop_b(g3)
+        for c, i in zip(cropped, idxs):
+            cropped_arrays[i] = c
+            cropped_by_shape.setdefault(c.shape, []).append(i)
 
     # stage 2 per cropped-shape group: blur/density/table/skew/core
-    for shape, idxs in cropped_by_shape.items():
-        c3 = np.stack([cropped_arrays[i] for i in idxs])
-        feats = _cropped_group_features(c3)
-        for k, i in enumerate(idxs):
-            results[i]["avg_blur"] = float(feats["avg_blur"][k])
-            results[i]["text_density"] = float(feats["text_density"][k])
-            results[i]["is_table_like"] = bool(feats["is_table_like"][k])
-            results[i]["avg_skew_deg"] = float(feats["avg_skew_deg"][k])
-            results[i]["core_frac"] = float(feats["core_frac"][k])
-    return results  # type: ignore[return-value]
+    for idxs in cropped_by_shape.values():
+        feats = _cropped_group_features(np.stack([cropped_arrays[i] for i in idxs]))
+        for name, col in feats.items():
+            out[name][idxs] = col
+    return out

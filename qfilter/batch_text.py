@@ -1,12 +1,11 @@
 """Batch-vectorized caption featurizer for the Arrow UDF hot path.
 
-`qfilter.engine.ocr_features` + `textops` compute per-row features with
-per-token Python dict lookups (NgramLM.step_logprob) and re-tokenize
-each caption up to five times (token_confidences x2, perplexity,
-heuristics, langid).  That per-row path stays as-is — it is the
-single-node oracle's code path (`oracle/rows.py`) — and this module is
-the independent, batch-vectorized re-implementation used by the Spark
-UDF (`qfilter.features`).  The two are verified bit-identical by
+The single-node oracle (`oracle/captionfeat.py` + `textops`, called
+from `oracle/rows.py`) computes per-row features with per-token Python
+dict lookups (NgramLM.step_logprob) and re-tokenizes each caption up
+to five times (token_confidences x2, perplexity, heuristics, langid).
+This module is the independent, batch-vectorized implementation used
+by the Spark UDF (`qfilter.features`).  The two are verified bit-identical by
 `tests/test_batch_text.py`, and every driver parity run compares them
 end-to-end (Spark batched vs DuckDB-over-oracle-sidecar per-row), so
 the redundancy *strengthens* the correctness gate rather than
@@ -101,7 +100,7 @@ class _LMTables:
     ) -> np.ndarray:
         """log P(w | prev2, prev1) for a flat token stream.
 
-        Identical math to ``NgramLM.step_logprob`` (engine oracle path):
+        Identical math to ``NgramLM.step_logprob`` (scalar oracle path):
         add-k 3/2/1-gram with exact-zero-context backoff, interpolated
         0.6/0.3/0.1 in probability space.
         """

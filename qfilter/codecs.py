@@ -262,15 +262,9 @@ def _rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
     return np.stack([y, cb, cr], axis=-1)
 
 
-def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
-    return _ycbcr_planes_to_rgb(ycc[..., 0], ycc[..., 1], ycc[..., 2])
-
-
 def _ycbcr_planes_to_rgb(y: np.ndarray, cbp: np.ndarray, crp: np.ndarray) -> np.ndarray:
-    """Per-plane YCbCr -> RGB: the same float32 expressions as the
-    historical stacked form (same per-element op order per channel, so
-    identical rounding).  Each channel is clipped/rounded/narrowed on
-    its own contiguous plane and only the final uint8 values are
+    """Per-plane YCbCr -> RGB.  Each channel is clipped/rounded/narrowed
+    on its own contiguous plane and only the final uint8 values are
     interleaved — the strided writes move 1 byte per sample instead of
     4, and clip/round run on contiguous data."""
     cb = cbp - 128.0

@@ -30,19 +30,19 @@ median/mean conf, pct80 = frac(conf >= 80), IQR = p75 - p25, line
 heights/spacings variance (spacing from ``top``-sorted blocks, positive
 only — the reference's W1 window op at `:300-308`).
 
-The pure-Python oracle (`oracle/`) uses this very module, so the Spark
-pipeline's F1 vs "reference labels" is exact by construction; what the
-tests verify is the Spark implementation of every operator and
-threshold.
+This module holds what both implementations of the contract share:
+the confidence calibration constants and `block_geometry`.  The
+Spark UDF computes the features batch-vectorized
+(`qfilter.batch_text`); the single-node oracle computes them per row
+(`oracle/captionfeat.py`), and `tests/test_batch_text.py` asserts
+exact equality between the two.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .textops import TextBundle, tokenize_words
-
-__all__ = ["token_confidences", "block_geometry", "ocr_features", "OCR_FEATURE_NAMES"]
+__all__ = ["CONF_BIAS", "W_CHAR", "W_WORD", "block_geometry"]
 
 # conf = 100 * sigmoid(W_WORD*word_lp + W_CHAR*char_lp + CONF_BIAS):
 # word_lp = interpolated 3-gram word-LM logprob, char_lp = best-language
@@ -55,38 +55,6 @@ W_WORD = 0.08
 W_CHAR = 1.2
 CONF_BIAS = 11.38
 
-OCR_FEATURE_NAMES = [
-    "median_ocr_conf",
-    "mean_ocr_conf",
-    "pct80",
-    "words_count",
-    "conf_iqr",
-    "bbox_area_text_frac",
-    "line_height_med",
-    "line_height_var",
-    "line_spacing_med",
-    "line_spacing_var",
-    "text_blocks_count",
-    "avg_block_width",
-    "avg_block_height",
-]
-
-
-def token_confidences(bundle: TextBundle, caption: str) -> np.ndarray:
-    """Per-token confidence in [0, 100] — monotone in both LM scores."""
-    word_lps = bundle.lm.token_logprobs(caption)
-    if word_lps.size == 0:
-        return np.empty(0, dtype=np.float64)
-    char_lps = np.array(
-        [
-            bundle.langid.scores(w).max() if w else -12.0
-            for w in tokenize_words(caption)
-        ],
-        dtype=np.float64,
-    )
-    z = W_WORD * word_lps + W_CHAR * char_lps + CONF_BIAS
-    return 100.0 / (1.0 + np.exp(-z))
-
 
 def block_geometry(blocks, page_w: int, page_h: int) -> tuple:
     """Bbox/line geometry stats for one row's ``blocks`` sidecar.
@@ -94,8 +62,8 @@ def block_geometry(blocks, page_w: int, page_h: int) -> tuple:
     Returns (n_blocks, bbox_area_text_frac, line_height_med,
     line_height_var, line_spacing_med, line_spacing_var,
     avg_block_width, avg_block_height).  Shared by the per-row oracle
-    path (`ocr_features`) and the batched Spark UDF path
-    (`qfilter.batch_text`) so geometry semantics cannot diverge.
+    path (`oracle.captionfeat.ocr_features`) and the batched Spark UDF
+    path (`qfilter.batch_text`).
     """
     blocks = list(blocks) if blocks is not None else []
     nb = len(blocks)
@@ -120,42 +88,3 @@ def block_geometry(blocks, page_w: int, page_h: int) -> tuple:
     else:
         bbox_frac = lh_med = lh_var = ls_med = ls_var = avg_w = avg_h = 0.0
     return nb, bbox_frac, lh_med, lh_var, ls_med, ls_var, avg_w, avg_h
-
-
-def ocr_features(bundle: TextBundle, caption: str, blocks, page_w: int, page_h: int) -> dict:
-    """OCR-analogue features for one row.
-
-    ``blocks``: iterable of (top, left, width, height) tuples/sequences
-    (the fixture sidecar), or None/empty.
-    """
-    caption = caption or ""
-    confs = token_confidences(bundle, caption)
-    words = tokenize_words(caption)
-    n = confs.size
-    if n:
-        med = float(np.median(confs))
-        mean = float(confs.mean())
-        pct80 = float(np.count_nonzero(confs >= 80.0)) / n
-        iqr = float(np.percentile(confs, 75) - np.percentile(confs, 25))
-    else:
-        med = mean = pct80 = iqr = 0.0
-
-    nb, bbox_frac, lh_med, lh_var, ls_med, ls_var, avg_w, avg_h = block_geometry(
-        blocks, page_w, page_h
-    )
-
-    return {
-        "median_ocr_conf": med,
-        "mean_ocr_conf": mean,
-        "pct80": pct80,
-        "words_count": len(words),
-        "conf_iqr": iqr,
-        "bbox_area_text_frac": bbox_frac,
-        "line_height_med": lh_med,
-        "line_height_var": lh_var,
-        "line_spacing_med": ls_med,
-        "line_spacing_var": ls_var,
-        "text_blocks_count": nb,
-        "avg_block_width": avg_w,
-        "avg_block_height": avg_h,
-    }

@@ -10,8 +10,7 @@ column transforms:
 2. ``with_caption_and_scrub`` — OCR-analogue conf/geometry features,
    langid, perplexity, Gopher/C4 heuristics AND the compiled-regex
    PII/toxicity scrub FUSED into one Arrow pass (the e2e path);
-   `with_caption_features` / `with_scrubbed_caption` remain as
-   separate stages for single-purpose callers.
+   ``with_scrubbed_caption`` runs the scrub alone.
 
 Scale notes (100 TB design):
 * No per-row Python at the Spark level — every UDF is a pandas UDF
@@ -38,18 +37,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import codecs, imageops
+from . import codecs
 from .batch_image import image_features_batch
 from .batch_text import caption_features_frame
-from .phash import average_hash
 from .textops import default_bundle
 
 __all__ = [
     "IMAGE_FEATURES_SCHEMA",
     "CAPTION_FEATURES_SCHEMA",
     "SCRUB_SCHEMA",
+    "image_features_frame",
     "with_image_features",
-    "with_caption_features",
+    "with_caption_and_scrub",
     "with_scrubbed_caption",
     "with_all_features",
 ]
@@ -72,69 +71,53 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
     ]
 )
 
-_ZERO_IMAGE_FEATURES = {
-    "roi_frac": 0.0, "avg_blur": 0.0, "text_density": 0.0,
-    "is_table_like": False, "avg_skew_deg": 0.0, "core_frac": 0.0,
-    "mean_brightness": 0.0, "median_brightness": 0.0, "contrast": 0.0,
-    "dark_pixels_percent": 0.0, "very_dark_pixels_percent": 0.0,
+_IMAGE_COLUMN_DTYPES = {
+    f.name: {T.BooleanType(): bool, T.LongType(): np.int64}.get(f.dataType, np.float64)
+    for f in IMAGE_FEATURES_SCHEMA.fields
+    if f.name != "error"
 }
 
 
-def _image_features_rows(data, fmt, w, h) -> pd.DataFrame:
-    """Per-row scalar path — the independently-coded oracle twin of the
-    shape-batched hot path below (`batch_text` vs `engine` pattern;
-    bit-identity asserted in tests/test_batch_image.py) and the
-    fallback that preserves per-row error-channel semantics if a batch
-    kernel ever throws mid-stack."""
-    rows = []
-    for b, f, ww, hh in zip(data, fmt, w, h):
-        try:
-            px = codecs.decode(b, f, int(ww), int(hh))
-            gray = imageops.grayscale(px)  # shared by features + phash
-            feats = imageops.image_features(px, _gray=gray)
-            feats["phash64"] = average_hash(px, _gray=gray)
-            feats["error"] = None
-        except Exception as exc:  # noqa: BLE001 — reference error channel
-            feats = dict(_ZERO_IMAGE_FEATURES)
-            feats["phash64"] = 0
-            feats["error"] = f"{type(exc).__name__}: {exc}"
-        rows.append(feats)
-    return pd.DataFrame(rows)
+def _scatter(cols: dict, rows, feats: dict) -> None:
+    for name, values in feats.items():
+        cols[name][rows] = values
 
 
-@F.pandas_udf(IMAGE_FEATURES_SCHEMA)
-def _image_features_udf(
+def image_features_frame(
     data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series
 ) -> pd.DataFrame:
-    # decode per-row (variable-length bytes; the reference error
-    # channel lives here), then run all pixel kernels ONCE per
-    # (h, w) shape-group of the Arrow batch — see qfilter/batch_image.
+    """Body of the image UDF: decode each row, run the shape-batched
+    kernels once over the decoded images, and scatter their column
+    arrays into a frame in `IMAGE_FEATURES_SCHEMA` order.
+
+    A row whose bytes do not decode gets zero features, ``phash64`` 0
+    and an ``error`` string (the reference's zero-result path,
+    `classificator_extended_paddleocr.py:485-512`).  If a kernel raises
+    on the batch, each image is rerun as a batch of one, so only the
+    image that fails gets an error row."""
     n = len(data)
-    pxs, ok_idx, err_rows = [], [], {}
+    cols = {name: np.zeros(n, dtype=dt) for name, dt in _IMAGE_COLUMN_DTYPES.items()}
+    error: list = [None] * n
+    pxs, ok = [], []
     for i, (b, f, ww, hh) in enumerate(zip(data, fmt, w, h)):
         try:
             pxs.append(codecs.decode(b, f, int(ww), int(hh)))
-            ok_idx.append(i)
+            ok.append(i)
         except Exception as exc:  # noqa: BLE001 — reference error channel
-            feats = dict(_ZERO_IMAGE_FEATURES)
-            feats["phash64"] = 0
-            feats["error"] = f"{type(exc).__name__}: {exc}"
-            err_rows[i] = feats
+            error[i] = f"{type(exc).__name__}: {exc}"
     try:
-        ok_feats = image_features_batch(pxs)
+        _scatter(cols, ok, image_features_batch(pxs))
     except Exception:  # noqa: BLE001 — keep per-row error granularity
-        return _image_features_rows(data, fmt, w, h)
-    rows: list = [None] * n
-    for i, feats in zip(ok_idx, ok_feats):
-        feats["error"] = None
-        rows[i] = feats
-    for i, feats in err_rows.items():
-        rows[i] = feats
-    # fix the column order to the schema: the batch dicts insert keys
-    # in stage order, not schema order, and Spark maps struct fields
-    # positionally (explicit columns= also keeps a zero-row batch from
-    # producing a column-less frame that the reindex would KeyError on)
-    return pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA])
+        for i, px in zip(ok, pxs):
+            try:
+                _scatter(cols, [i], image_features_batch([px]))
+            except Exception as exc:  # noqa: BLE001
+                error[i] = f"{type(exc).__name__}: {exc}"
+    cols["error"] = error
+    return pd.DataFrame(cols, columns=[f.name for f in IMAGE_FEATURES_SCHEMA])
+
+
+_image_features_udf = F.pandas_udf(image_features_frame, IMAGE_FEATURES_SCHEMA)
 
 
 CAPTION_FEATURES_SCHEMA = T.StructType(
@@ -187,24 +170,6 @@ def _blocks_to_tuples(blocks) -> list | None:
     return out
 
 
-@F.pandas_udf(CAPTION_FEATURES_SCHEMA)
-def _caption_features_udf(
-    caption: pd.Series, blocks: pd.Series, w: pd.Series, h: pd.Series
-) -> pd.DataFrame:
-    # batch-vectorized path (single tokenization, searchsorted LM
-    # lookups, per-unique-word caching) — bit-identical to the per-row
-    # oracle path (`engine.ocr_features`), proven by
-    # tests/test_batch_text.py and every driver parity run
-    return caption_features_frame(
-        default_bundle(),
-        list(caption),
-        [_blocks_to_tuples(b) for b in blocks],
-        w.to_numpy(),
-        h.to_numpy(),
-        _HEUR_KEEP,
-    )
-
-
 SCRUB_SCHEMA = T.StructType(
     [
         T.StructField("caption_scrubbed", T.StringType()),
@@ -236,19 +201,6 @@ def with_image_features(df: DataFrame, drop_bytes: bool = True) -> DataFrame:
     return out.select(*cols, "_imgf.*")
 
 
-def with_caption_features(df: DataFrame) -> DataFrame:
-    blocks_col = (
-        F.col("blocks") if "blocks" in df.columns
-        else F.lit(None).cast(
-            "array<struct<top:double,left:double,width:double,height:double>>"
-        )
-    )
-    out = df.withColumn(
-        "_capf", _caption_features_udf(F.col("caption"), blocks_col, F.col("w"), F.col("h"))
-    )
-    return out.select(*df.columns, "_capf.*")
-
-
 def with_scrubbed_caption(df: DataFrame) -> DataFrame:
     out = df.withColumn("_scr", _scrub_udf(F.col("caption")))
     return out.select(*df.columns, "_scr.*")
@@ -264,9 +216,7 @@ def _caption_scrub_udf(
     caption: pd.Series, blocks: pd.Series, w: pd.Series, h: pd.Series
 ) -> pd.DataFrame:
     # fused caption-features + scrub: ONE Arrow round trip and one
-    # Python-worker pass over the caption column instead of two; the
-    # interiors are the exact batched functions of the separate
-    # stages, so every value is bit-identical to running them apart
+    # Python-worker pass over the caption column instead of two
     capf = caption_features_frame(
         default_bundle(),
         list(caption),
@@ -283,9 +233,7 @@ def _caption_scrub_udf(
 
 
 def with_caption_and_scrub(df: DataFrame) -> DataFrame:
-    """Fused caption-features + scrub stage (the e2e hot path; the
-    separate `with_caption_features` / `with_scrubbed_caption` stages
-    remain for callers that need only one side)."""
+    """Fused caption-features + scrub stage (the e2e hot path)."""
     blocks_col = (
         F.col("blocks") if "blocks" in df.columns
         else F.lit(None).cast(

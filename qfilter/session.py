@@ -24,6 +24,10 @@ __all__ = ["get_spark", "ARROW_BATCH_ROWS"]
 # for multi-KB bytes cells.
 ARROW_BATCH_ROWS = int(os.environ.get("QFILTER_ARROW_BATCH_ROWS", "64"))
 
+# glibc MALLOC_MMAP_THRESHOLD_ / MALLOC_TRIM_THRESHOLD_ for the Python
+# workers (32 MiB), unless the environment sets them
+_MALLOC_THRESHOLD = "33554432"
+
 
 def get_spark(
     app: str = "qfilter",
@@ -31,18 +35,6 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    # glibc allocator tuning for the Arrow/NumPy workers (r6): the
-    # image kernels allocate/free many few-hundred-KB temporaries per
-    # batch; at default thresholds glibc serves those via mmap/munmap,
-    # and with one worker per core the resulting page-fault + TLB
-    # shootdown churn costs ~10-13% of kernel throughput at 32 procs
-    # (interleaved A/B in BENCH/kernel_profile.py FULL_PATH).  Raising
-    # the thresholds keeps such blocks on the sbrk heap.  Per-process
-    # behavior — equally valid on any executor size; setdefault so a
-    # deployment can still override; inherited by the JVM and its
-    # Python workers when the session is created by this factory.
-    for var in ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_"):
-        os.environ.setdefault(var, "33554432")
     cores = os.cpu_count() or 8
     master = master or os.environ.get("QFILTER_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
@@ -60,17 +52,26 @@ def get_spark(
         # multi-KB `bytes` cells make the default 4096-row vectorized
         # reader batch a heap hazard: 32 concurrent scan tasks each
         # buffering ~24 MB column chunks intermittently OOMed an 8 GB
-        # heap in the streaming read (observed r6; BENCH/run_volume.py
-        # hit the same wall at 4x volume and already caps its batch).
-        # 512 rows bounds reader memory by bytes, not row count, with
-        # no measurable cost on narrow-row scans.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("QFILTER_READER_BATCH", "512"),
-        )
+        # heap in the streaming read (BENCH/run_volume.py hit the same
+        # wall at 4x volume and caps its batch too).  512 rows bounds
+        # reader memory by bytes, not row count, with no measurable
+        # cost on narrow-row scans.
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.driver.memory", os.environ.get("QFILTER_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
     )
+    # glibc allocator tuning for the Arrow/NumPy Python workers: the
+    # image kernels allocate/free many few-hundred-KB temporaries per
+    # batch; at default thresholds glibc serves those via mmap/munmap,
+    # and with one worker per core the resulting page-fault + TLB
+    # shootdown churn costs ~10-13% of kernel throughput at 32 procs
+    # (interleaved A/B in BENCH/kernel_profile.py FULL_PATH).  Raising
+    # the thresholds keeps such blocks on the sbrk heap.  PySpark
+    # forwards spark.executorEnv.* to the Python workers it launches,
+    # so this process's environment stays untouched; a value already
+    # set in the environment wins.
+    for var in ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_"):
+        b = b.config(f"spark.executorEnv.{var}", os.environ.get(var, _MALLOC_THRESHOLD))
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

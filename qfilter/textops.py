@@ -411,7 +411,7 @@ class ScrubBundle:
 
         Scalar path — kept as the independently-coded oracle twin of
         :meth:`scrub_series` (the batched hot path), mirroring the
-        ``engine.ocr_features`` vs ``batch_text`` dual-implementation
+        ``oracle.captionfeat`` vs ``batch_text`` dual-implementation
         pattern; parity is asserted in tests/test_batch_text.py."""
         if not text:
             return text, 0, 0
@@ -429,8 +429,7 @@ class ScrubBundle:
         ``re.subn``'s replacement count.  Returns
         ``(scrubbed: Series[str], pii_hits: Series[int32],
         tox_hits: Series[int32])``; null captions scrub to the empty
-        string with zero hits (matching the UDF's historical
-        ``scrub(cap or "")`` semantics).
+        string with zero hits, as ``scrub(cap or "")`` does.
         """
         import pandas as pd
 

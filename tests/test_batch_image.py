@@ -1,13 +1,14 @@
 """Bit-identity of the shape-batched image kernels vs the scalar path.
 
 `qfilter.batch_image.image_features_batch` (the image-UDF interior)
-must produce EXACTLY the values of the scalar path
-(`imageops.image_features` + `phash.average_hash`) — exact float
-equality: the driver's parity gate hashes values, so one ULP of drift
-is a red row.  Also proves, exhaustively over their full input
-domains, the two integer-form shortcuts the batch path relies on
-(banker's-rounded /256 in the blur; integer-space adaptive-threshold
-comparison).
+must produce EXACTLY the values of the scalar oracle twin
+(`oracle.imagefeat.image_features` + `average_hash`) — exact float
+equality: the parity gate hashes values, so one ULP of drift is a red
+row.  Also proves, exhaustively over their full input domains, the
+integer-form shortcuts the batch path relies on (unclipped luma
+rounding; banker's-rounded /256 in the blur; integer-space
+adaptive-threshold comparison), and that the image UDF body keeps
+per-row error granularity with its single batched path.
 """
 
 from __future__ import annotations
@@ -15,26 +16,27 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from oracle.imagefeat import average_hash, image_features
 from qfilter import codecs, imageops
 from qfilter.batch_image import image_features_batch
-from qfilter.phash import average_hash
 
 
 def _scalar_feats(px):
     gray = imageops.grayscale(px)
-    d = imageops.image_features(px, _gray=gray)
+    d = image_features(px, _gray=gray)
     d["phash64"] = average_hash(px, _gray=gray)
     return d
 
 
-def _decode_fixture_images(limit=400):
+def _fixture_frame(limit=400):
+    import os
+
     import pyarrow.parquet as pq
 
     from make_fixtures import ensure_fixtures
-    import os
 
     tdir = ensure_fixtures("smoke")
-    t = (
+    return (
         pq.read_table(
             os.path.join(tdir, "images.parquet"),
             columns=["bytes", "fmt", "w", "h"],
@@ -42,6 +44,10 @@ def _decode_fixture_images(limit=400):
         .to_pandas()
         .head(limit)
     )
+
+
+def _decode_fixture_images(limit=400):
+    t = _fixture_frame(limit)
     pxs = []
     for b, f, w, h in zip(t["bytes"], t["fmt"], t["w"], t["h"]):
         try:
@@ -51,21 +57,27 @@ def _decode_fixture_images(limit=400):
     return pxs
 
 
-def _assert_identical(ref: dict, got: dict):
+def _assert_identical(ref: dict, got: dict, i: int):
+    """Scalar dict ``ref`` == row ``i`` of the column dict ``got``."""
+    assert set(got) == set(ref)
     for k, v in ref.items():
-        gv = got[k]
+        gv = got[k][i]
         if isinstance(v, float):
             assert (v == gv) or (np.isnan(v) and np.isnan(gv)), (k, v, gv)
         else:
             assert v == gv, (k, v, gv)
 
 
+def _assert_batch_matches_scalar(pxs):
+    got = image_features_batch(pxs)
+    for i, px in enumerate(pxs):
+        _assert_identical(_scalar_feats(px), got, i)
+
+
 def test_batch_matches_scalar_on_fixtures():
     pxs = _decode_fixture_images()
     assert len(pxs) > 100
-    got = image_features_batch(pxs)
-    for px, g in zip(pxs, got):
-        _assert_identical(_scalar_feats(px), g)
+    _assert_batch_matches_scalar(pxs)
 
 
 def test_batch_matches_scalar_random_shapes():
@@ -83,9 +95,42 @@ def test_batch_matches_scalar_random_shapes():
                 y = int(rng.integers(0, h))
                 px[y : y + 2, :] = 40
         pxs.append(px)
+    _assert_batch_matches_scalar(pxs)
+
+
+def test_batch_returns_typed_columns():
+    rng = np.random.default_rng(11)
+    pxs = [rng.integers(0, 256, (h, 9, 3), dtype=np.uint8) for h in (5, 9, 5)]
     got = image_features_batch(pxs)
-    for px, g in zip(pxs, got):
-        _assert_identical(_scalar_feats(px), g)
+    assert got["is_table_like"].dtype == np.bool_
+    assert got["phash64"].dtype == np.int64
+    assert got["avg_blur"].dtype == np.float64
+    assert all(len(col) == len(pxs) for col in got.values())
+    empty = image_features_batch([])
+    assert set(empty) == set(got) and all(len(c) == 0 for c in empty.values())
+
+
+def test_luma_range_exhaustive():
+    """grayscale_b skips the scalar path's clip: round(luma) must lie in
+    [0, 255] for EVERY one of the 2^24 RGB triples, evaluated with the
+    kernel's own accumulation order (chunked by red value)."""
+    from qfilter.batch_image import grayscale_b
+
+    gb = np.arange(1 << 16, dtype=np.uint32)
+    g = (gb >> 8).astype(np.uint8)
+    b = (gb & 0xFF).astype(np.uint8)
+    for r in range(0, 256, 16):
+        rgb = np.empty((16, 1 << 16, 3), dtype=np.uint8)
+        rgb[..., 0] = np.arange(r, r + 16, dtype=np.uint8)[:, None]
+        rgb[..., 1] = g
+        rgb[..., 2] = b
+        f = rgb[..., 0] * 0.299
+        f += rgb[..., 1] * 0.587
+        f += rgb[..., 2] * 0.114
+        np.round(f, out=f)
+        assert f.min() >= 0.0 and f.max() <= 255.0, r
+        ref = imageops.grayscale(rgb)  # the clipped scalar form
+        assert np.array_equal(grayscale_b(rgb[:, None]), ref[:, None]), r
 
 
 def test_blur_integer_rounding_exhaustive():
@@ -134,6 +179,48 @@ def test_cc_banded_stats_match_per_image():
             continue
         for k in ref:
             assert np.array_equal(ref[k], st[k][sel]), (i, k)
+
+
+def test_udf_body_falls_back_to_single_image_batches(monkeypatch):
+    """If a kernel raises on a multi-image batch, the UDF body reruns
+    each image as a batch of one: good rows still equal the oracle
+    twin exactly, and decode-error rows keep their error and phash 0."""
+    import pandas as pd
+
+    from qfilter import features
+
+    t = _fixture_frame(120)
+    data = list(t["bytes"])
+    for i in range(0, len(data), 7):  # interleave undecodable rows
+        data[i] = b"\x00\x01broken"
+    real = features.image_features_batch
+    sizes = []
+
+    def one_at_a_time(pxs):
+        sizes.append(len(pxs))
+        if len(pxs) > 1:
+            raise RuntimeError("kernel failure")
+        return real(pxs)
+
+    monkeypatch.setattr(features, "image_features_batch", one_at_a_time)
+    out = features.image_features_frame(
+        pd.Series(data), t["fmt"], t["w"], t["h"]
+    )
+    assert list(out.columns) == [f.name for f in features.IMAGE_FEATURES_SCHEMA]
+    assert len(out) == len(t) and max(sizes) > 1 and 1 in sizes
+    cols = {k: out[k].to_numpy() for k in out.columns if k != "error"}
+    n_err = 0
+    for i in range(len(t)):
+        try:
+            px = codecs.decode(data[i], t["fmt"][i], int(t["w"][i]), int(t["h"][i]))
+        except Exception:
+            n_err += 1
+            assert isinstance(out["error"][i], str) and out["error"][i]
+            assert out["phash64"][i] == 0
+            continue
+        assert out["error"][i] is None
+        _assert_identical(_scalar_feats(px), cols, i)
+    assert n_err >= len(t) // 7
 
 
 def test_error_rows_interleaved_with_batch(spark, smoke_dir):

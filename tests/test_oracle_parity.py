@@ -21,6 +21,10 @@ TABLES = [
 
 def _duck():
     con = duckdb.connect()
+    # one thread: the winnow_fingerprints oracle peaks at 11.5 GB RSS
+    # with 4 threads and 3.9 GB with 1 — on a 15 GB machine the
+    # 4-thread peak gets the whole test run OOM-killed
+    con.execute("SET threads=1")
     for t in TABLES:
         p = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(p):

@@ -33,8 +33,8 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from oracle import assess_row  # noqa: E402
+from oracle.imagefeat import average_hash  # noqa: E402
 from qfilter import codecs  # noqa: E402
-from qfilter.phash import average_hash  # noqa: E402
 from qfilter.textops import build_corpus, default_bundle  # noqa: E402
 import qfilter.textops as textops  # noqa: E402
 
