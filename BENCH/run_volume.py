@@ -109,14 +109,24 @@ spark.stop()
 """
 
 
+def mem_total_mb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
+
 def run_level(cpus: int, mult: int, runs: int) -> dict:
     cmd = [sys.executable, "-c", _CHILD, REPO, str(cpus), str(mult), str(runs)]
     if sys.platform == "linux" and shutil.which("taskset"):
         cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
     env = dict(os.environ)
-    # the child caches mult x the bench rows; size the heap to the
-    # data like a real deployment would (the box has 128 GiB)
-    env.setdefault("QFILTER_DRIVER_MEM", "64g" if mult > 4 else "32g")
+    # the child caches mult x the bench rows; size the heap from the
+    # machine: a quarter of MemTotal, half for the 10x tier (about
+    # 32g/64g on a 128 GiB box).  An explicit QFILTER_DRIVER_MEM wins.
+    if "QFILTER_DRIVER_MEM" not in env:
+        env["QFILTER_DRIVER_MEM"] = f"{mem_total_mb() // (2 if mult > 4 else 4)}m"
     out = subprocess.run(cmd, capture_output=True, text=True, env=env)
     if out.returncode != 0:
         sys.stderr.write(out.stderr[-4000:])

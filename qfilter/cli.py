@@ -132,24 +132,9 @@ def main(argv: list[str] | None = None) -> int:
             w, b = train_from_features(feats)
             save_model(args.model_out, w, b)
         elif args.family == "svm":
-            import numpy as np
+            from .model import _driver_sample, fit_svm_linear, save_model
 
-            from .model import (
-                MODEL_FEATURES,
-                TRAIN_SAMPLE_MAX,
-                fit_svm_linear,
-                save_model,
-            )
-
-            rows = (
-                feats.select("image_id", "keep", *MODEL_FEATURES)
-                .orderBy("image_id")
-                .limit(TRAIN_SAMPLE_MAX)
-                .collect()
-            )
-            X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-            y = np.asarray([1.0 if r["keep"] else 0.0 for r in rows])
-            w, b = fit_svm_linear(X, y)
+            w, b = fit_svm_linear(*_driver_sample(feats))
             save_model(args.model_out, w, b)
         else:
             from .model import gb_train_from_features, save_gb

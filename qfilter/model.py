@@ -76,6 +76,26 @@ LOGREG_ITERS = 400
 LOGREG_L2 = 1e-3
 
 
+def _driver_sample(
+    features: DataFrame,
+    label_col: str = "keep",
+    order_col: str = "image_id",
+    sample_max: int = TRAIN_SAMPLE_MAX,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Deterministic orderBy + limit sample of a Spark features table ->
+    driver -> ``(X, y)``.  Only <= sample_max rows ever reach the driver
+    (100 TB: the sort+limit is a TakeOrdered, not a full collect)."""
+    rows = (
+        features.select(order_col, label_col, *MODEL_FEATURES)
+        .orderBy(order_col)
+        .limit(sample_max)
+        .collect()
+    )
+    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
+    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
+    return X, y
+
+
 def fit_logreg(
     X: np.ndarray,
     y: np.ndarray,
@@ -128,17 +148,8 @@ def train_from_features(
     sample_max: int = TRAIN_SAMPLE_MAX,
 ) -> tuple[np.ndarray, float]:
     """Fit from a Spark features table: deterministic orderBy + limit
-    sample -> driver -> `fit_logreg`.  Only <= sample_max rows ever
-    reach the driver (100 TB: the sort+limit is a TakeOrdered, not a
-    full collect)."""
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
+    driver sample (`_driver_sample`) -> `fit_logreg`."""
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
     return fit_logreg(X, y)
 
 
@@ -157,15 +168,8 @@ def cv_models_from_features(
     position % k over the sorted sample, model f trained on every
     OTHER fold.  Same driver discipline as `train_from_features` —
     only <= sample_max rows leave the cluster."""
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
+    folds = np.arange(len(y)) % k
     return [fit_logreg(X[folds != f], y[folds != f]) for f in range(k)]
 
 
@@ -345,14 +349,7 @@ def gb_train_from_features(
 ) -> dict:
     """Same deterministic orderBy+limit driver sample as
     `train_from_features`, GB-stumps fit."""
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
     return fit_gb_stumps(X, y)
 
 
@@ -363,15 +360,8 @@ def gb_cv_models_from_features(
     order_col: str = "image_id",
     sample_max: int = TRAIN_SAMPLE_MAX,
 ) -> list[dict]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
+    folds = np.arange(len(y)) % k
     return [fit_gb_stumps(X[folds != f], y[folds != f]) for f in range(k)]
 
 
@@ -752,13 +742,8 @@ def svm_rff_cv_models_from_features(
     features: DataFrame, k: int = CV_K, label_col: str = "keep",
     order_col: str = "image_id", sample_max: int = TRAIN_SAMPLE_MAX,
 ) -> list[dict]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col).limit(sample_max).collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
+    folds = np.arange(len(y)) % k
     return [fit_svm_rff(X[folds != f], y[folds != f]) for f in range(k)]
 
 
@@ -854,13 +839,8 @@ def rf_cv_models_from_features(
     features: DataFrame, k: int = CV_K, label_col: str = "keep",
     order_col: str = "image_id", sample_max: int = TRAIN_SAMPLE_MAX,
 ) -> list[list[dict]]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col).limit(sample_max).collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
+    folds = np.arange(len(y)) % k
     return [fit_rf_lite(X[folds != f], y[folds != f]) for f in range(k)]
 
 
@@ -868,13 +848,8 @@ def svm_cv_models_from_features(
     features: DataFrame, k: int = CV_K, label_col: str = "keep",
     order_col: str = "image_id", sample_max: int = TRAIN_SAMPLE_MAX,
 ) -> list[tuple[np.ndarray, float]]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col).limit(sample_max).collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
+    X, y = _driver_sample(features, label_col, order_col, sample_max)
+    folds = np.arange(len(y)) % k
     return [fit_svm_linear(X[folds != f], y[folds != f]) for f in range(k)]
 
 

@@ -124,8 +124,8 @@ def stream_quality_filter_to_catalog(
     between sink write and checkpoint advance — the foreachBatch
     at-least-once window) commits zero duplicate rows.  This is the
     streaming-into-Iceberg sink shape: every micro-commit is a snapshot,
-    time travel and incremental reads work mid-stream, and with
-    ``maintain_every`` = N the sink bin-packs + expires every N commits
+    time travel works mid-stream, and with ``maintain_every`` = N the
+    sink bin-packs + expires every N commits
     — bounding the small-file growth a long-running stream otherwise
     suffers (the #1 operational failure of streaming lakehouse sinks).
 

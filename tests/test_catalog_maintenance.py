@@ -1,13 +1,11 @@
 """Iceberg-analog table maintenance: compaction, snapshot expiry,
-incremental append scans.
+schema and partition evolution on read.
 
 Why this matters at 100 TB: every pipeline wave and every streaming
 micro-commit appends one snapshot dir; after 10^4 commits the table is
 10^6+ small files and scans die on file-open overhead.  Compaction
-(Iceberg rewrite_data_files) bin-packs the current snapshot, expiry
-(expireSnapshots + orphan GC) reclaims the superseded bytes, and the
-incremental scan lets downstream consumers read only the appended rows
-instead of rescanning the table per run.
+(Iceberg rewrite_data_files) bin-packs the current snapshot, and expiry
+(expireSnapshots + orphan GC) reclaims the superseded bytes.
 """
 
 from __future__ import annotations
@@ -48,7 +46,7 @@ def test_compact_preserves_content_and_shrinks_files(spark, cat):
     before_files = len(cat.table_data_files("t"))
     assert before_files >= 20
     before = _hash(cat.read(spark, "t"))
-    pre_sid = cat.current_snapshot("t")["id"]
+    pre_sid = cat.snapshots("t")[-1]["id"]
 
     sid = cat.compact(spark, "t", target_file_bytes=1 << 30)
     assert sid == pre_sid + 1
@@ -118,40 +116,6 @@ def test_expire_snapshots_gc(spark, cat):
         cat.read(spark, "e", snapshot=0)
 
 
-def test_incremental_read_appends_only(spark, cat):
-    cat.append("i", _mk(spark, 0, 10))      # snapshot 0
-    cat.append("i", _mk(spark, 10, 30))     # snapshot 1
-    cat.compact(spark, "i", 1 << 30)        # snapshot 2 (replace — no new rows)
-    cat.append("i", _mk(spark, 30, 35))     # snapshot 3
-
-    inc = cat.read_incremental(spark, "i", since_snapshot=0)
-    got = sorted(r["id"] for r in inc.collect())
-    assert got == list(range(10, 30)) + list(range(30, 35))
-
-    # bounded window: only snapshot 1's rows
-    inc01 = cat.read_incremental(spark, "i", since_snapshot=0, to_snapshot=1)
-    assert sorted(r["id"] for r in inc01.collect()) == list(range(10, 30))
-
-    # since == current -> empty, with the table's schema
-    cur = cat.current_snapshot("i")["id"]
-    empty = cat.read_incremental(spark, "i", since_snapshot=cur)
-    assert empty.count() == 0
-    assert set(empty.columns) == {"id", "bucket", "caption"}
-
-    # since=-1 -> everything
-    allrows = cat.read_incremental(spark, "i", since_snapshot=-1)
-    assert allrows.count() == 35
-
-
-def test_incremental_read_refuses_expired_chain(spark, cat):
-    cat.append("x", _mk(spark, 0, 10))
-    cat.append("x", _mk(spark, 10, 20))
-    cat.compact(spark, "x", 1 << 30)
-    cat.expire_snapshots("x", keep_last=1)
-    with pytest.raises(ValueError, match="expired"):
-        cat.read_incremental(spark, "x", since_snapshot=0)
-
-
 def test_add_column_schema_evolution(spark, cat):
     """Iceberg add-column semantics: dirs written before a column
     existed read back as null for it; the CURRENT snapshot's schema
@@ -194,17 +158,6 @@ def test_partition_evolution(spark, cat):
     assert all("bucket=" in f for f in files)
 
 
-def test_history_metadata_table(spark, cat):
-    cat.append("h", _mk(spark, 0, 10))
-    cat.append("h", _mk(spark, 10, 20))
-    cat.compact(spark, "h", target_file_bytes=1 << 30)
-    hist = cat.history(spark, "h").orderBy("snapshot_id").collect()
-    assert [r["snapshot_id"] for r in hist] == [0, 1, 2]
-    assert [r["parent"] for r in hist] == [None, 0, 1]
-    assert [r["operation"] for r in hist] == ["append", "append", "replace"]
-    assert [r["n_dirs"] for r in hist] == [1, 2, 1]
-
-
 def test_pipeline_maintain_then_resume(spark, smoke_dir, tmp_path_factory):
     """Compaction must not disturb resume: lineage, not file layout,
     carries the progress state."""
@@ -234,3 +187,13 @@ def test_pipeline_maintain_then_resume(spark, smoke_dir, tmp_path_factory):
     pipe.maintain(target_file_bytes=1 << 30)
     assert pipe.catalog.read(spark, "labels").count() == before
     assert len(pipe.catalog.snapshots("labels")) == 1
+
+
+def test_maintain_on_fresh_pipeline_raises_file_not_found(spark, tmp_path):
+    """A pipeline that never ran has no labels table: ``maintain`` fails
+    the way ``read`` does, with FileNotFoundError, not an IndexError."""
+    from qfilter.pipeline import QualityFilterPipeline
+
+    pipe = QualityFilterPipeline(spark, str(tmp_path / "fresh"))
+    with pytest.raises(FileNotFoundError):
+        pipe.maintain()

@@ -153,44 +153,6 @@ def test_weighted_median_no_full_table_window_sort(spark):
         assert "event_id" not in inp and "user_id" not in inp, plan
 
 
-def test_bucketed_join_no_shuffle(spark, smoke_dir):
-    """Co-located joins: two tables bucketed on image_id must
-    sort-merge-join with ZERO Exchange nodes (the 100 TB layout for
-    repeated key joins), while the same join on plain parquet shuffles
-    both sides.  Auto-broadcast is disabled so the small fixture
-    doesn't hide the proof behind a BroadcastHashJoin."""
-    import re
-
-    from qfilter.catalog import write_bucketed
-
-    img = spark.read.parquet(os.path.join(smoke_dir, "images.parquet")).select(
-        "image_id", "caption"
-    )
-    lab = spark.read.parquet(os.path.join(smoke_dir, "labels_ref.parquet")).select(
-        "image_id", "keep"
-    )
-    write_bucketed(img, "tp_b_images", ["image_id"], 8)
-    write_bucketed(lab, "tp_b_labels", ["image_id"], 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        def n_exchanges(df):
-            plan = _fmt(df)
-            return len(re.findall(r"^\(\d+\) Exchange\b", plan, flags=re.M)), plan
-
-        nb, plan_b = n_exchanges(
-            spark.table("tp_b_images").join(spark.table("tp_b_labels"), "image_id")
-        )
-        nu, _ = n_exchanges(img.join(lab, "image_id"))
-        assert "SortMergeJoin" in plan_b, plan_b
-        assert nb == 0, f"bucketed join shuffled ({nb} exchanges):\n{plan_b}"
-        assert nu >= 2  # plain parquet shuffles both sides
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS tp_b_images")
-        spark.sql("DROP TABLE IF EXISTS tp_b_labels")
-
-
 def test_aqe_splits_skewed_join(spark):
     """Skewed keys at scale: AQE must detect the hot partition in a
     sort-merge join and split it (SortMergeJoin(skew=true) +
