@@ -24,6 +24,11 @@ overwrite — the Iceberg CAS).  Readers only ever see dirs listed by a
 committed manifest, so a killed writer leaves garbage data but no torn
 table.  ``read(snapshot=...)`` reads any snapshot not yet expired.
 
+Beyond that contract, with no caller in the package but their own
+tests: write-audit-publish (``append_staged``, ``read_staged``,
+``publish_staged``, ``abort_staged``), a copy-on-write ``merge``,
+sort-order ``compact(sort_by=...)`` and ``read_incremental``.
+
 Swapping in real Iceberg is a config change at the call sites
 (`spark.sql.catalog.* = org.apache.iceberg.spark.SparkCatalog` and
 `df.writeTo(table).append()`); nothing else in the pipeline knows
@@ -32,6 +37,8 @@ about this layout.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 import shutil
@@ -49,10 +56,10 @@ __all__ = ["Catalog", "CommitConflict"]
 class CommitConflict(Exception):
     """Another writer committed the snapshot id first (optimistic
     concurrency, Iceberg's CommitFailedException).  ``append`` rebases
-    and retries automatically — appends commute; ``compact`` surfaces
-    it, because its rewrite was computed against a snapshot that is no
-    longer current and retrying blindly would silently drop the
-    concurrent writer's rows."""
+    and retries automatically — appends commute; ``compact``/``merge``
+    surface it, because their rewrite was computed against a snapshot
+    that is no longer current and retrying blindly would silently drop
+    the concurrent writer's rows."""
 
 
 class Catalog:
@@ -136,10 +143,7 @@ class Catalog:
         txn_id: str | None,
     ) -> int:
         data_dir = self._new_data_dir(table, "a")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        self._write(df, data_dir, partition_by)
         # optimistic-concurrency loop: data is written once; only the
         # manifest commit races.  Appends commute, so losing the CAS
         # just means rebasing onto the winner's snapshot and retrying.
@@ -152,21 +156,37 @@ class Catalog:
                     shutil.rmtree(data_dir, ignore_errors=True)
                     return existing
             snaps = self.snapshots(table)
-            manifest = {
-                "id": (snaps[-1]["id"] + 1) if snaps else 0,
-                "parent": snaps[-1]["id"] if snaps else None,
-                "dirs": (snaps[-1]["dirs"] if snaps else []) + [data_dir],
-                "partition_by": partition_by or [],
-                # schema travels in the manifest so empty tables (zero
-                # rows/files) still read back with the right columns
-                "schema": df.schema.jsonValue(),
-            }
+            # schema travels in the manifest so empty tables (zero
+            # rows/files) still read back with the right columns
+            manifest = self._next_append(
+                snaps, data_dir, partition_by, df.schema.jsonValue()
+            )
             if txn_id is not None:
                 manifest["txn_id"] = txn_id
             try:
                 return self._commit_manifest(table, manifest)
             except CommitConflict:
                 continue
+
+    @staticmethod
+    def _write(df: DataFrame, data_dir: str, partition_by: list[str] | None) -> None:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(data_dir)
+
+    @staticmethod
+    def _next_append(
+        snaps: list[dict], data_dir: str, partition_by: list[str] | None, schema: dict
+    ) -> dict:
+        """Manifest of an append of ``data_dir`` on top of ``snaps[-1]``."""
+        return {
+            "id": (snaps[-1]["id"] + 1) if snaps else 0,
+            "parent": snaps[-1]["id"] if snaps else None,
+            "dirs": (snaps[-1]["dirs"] if snaps else []) + [data_dir],
+            "partition_by": partition_by or [],
+            "schema": schema,
+        }
 
     def _commit_manifest(self, table: str, manifest: dict) -> int:
         """Atomically commit snapshot ``manifest['id']`` — create-if-
@@ -187,6 +207,100 @@ class Catalog:
         finally:
             os.unlink(tmp)
         return sid
+
+    # -------------------------------------------- write-audit-publish
+    #
+    # Iceberg's WAP flow (spark.wap.id): a writer STAGES a commit that
+    # no reader sees, an audit job validates the staged rows, and only
+    # then is the commit PUBLISHED into the table — or aborted, leaving
+    # no trace.  The data is written once: publish is a metadata CAS
+    # over the already-written dir, not a rewrite.
+
+    def _staged_file(self, table: str, wap_id: str) -> str:
+        return os.path.join(self._tdir(table), "staged", f"{wap_id}.json")
+
+    def append_staged(
+        self, table: str, df: DataFrame, partition_by: list[str] | None = None
+    ) -> str:
+        """Write an append WITHOUT committing it and return the
+        ``wap_id`` for ``read_staged`` / ``publish_staged`` /
+        ``abort_staged``.  Readers of the table never see staged rows."""
+        wap_id = uuid.uuid4().hex[:12]
+        data_dir = self._new_data_dir(table, "s")
+        self._write(df, data_dir, partition_by)
+        path = self._staged_file(table, wap_id)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            json.dump({"dir": data_dir, "partition_by": partition_by or [],
+                       "schema": df.schema.jsonValue()}, f)
+        os.replace(path + ".tmp", path)
+        return wap_id
+
+    def _staged(self, table: str, wap_id: str) -> dict:
+        try:
+            with open(self._staged_file(table, wap_id)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise FileNotFoundError(f"no staged commit {wap_id!r} on {table!r}") from None
+
+    def staged_ids(self, table: str) -> list[str]:
+        sdir = os.path.dirname(self._staged_file(table, ""))
+        if not os.path.isdir(sdir):
+            return []
+        return sorted(n[:-5] for n in os.listdir(sdir) if n.endswith(".json"))
+
+    def read_staged(self, spark: SparkSession, table: str, wap_id: str) -> DataFrame:
+        """The audit view: the table as it would be once published."""
+        part = spark.read.parquet(self._staged(table, wap_id)["dir"])
+        if not self.exists(table):
+            return part
+        return self.read(spark, table).unionByName(part, allowMissingColumns=True)
+
+    @staticmethod
+    def _merge_schema(base: dict | None, extra: dict | None) -> dict | None:
+        """Union of two schema JSONs by field name, base order first."""
+        if not base or not extra:
+            return base or extra
+        names = {f["name"] for f in base["fields"]}
+        fields = base["fields"] + [f for f in extra["fields"] if f["name"] not in names]
+        return {**base, "fields": fields}
+
+    def publish_staged(self, table: str, wap_id: str) -> int:
+        """Commit a staged append (Iceberg's cherry-pick), rebasing over
+        any appends — and their schema widenings — that landed since
+        staging.  Idempotent on ``wap_id``: a retry after a crash between
+        the commit and the staged-file removal returns the published
+        snapshot instead of committing the dir twice."""
+        staged = self._staged(table, wap_id)
+        sid = None
+        while sid is None:
+            snaps = self.snapshots(table)
+            sid = next((s["id"] for s in snaps if s.get("wap_id") == wap_id), None)
+            if sid is None:
+                base = snaps[-1].get("schema") if snaps else None
+                manifest = self._next_append(
+                    snaps, staged["dir"], staged["partition_by"],
+                    self._merge_schema(base, staged["schema"]),
+                )
+                manifest["wap_id"] = wap_id
+                with contextlib.suppress(CommitConflict):
+                    sid = self._commit_manifest(table, manifest)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._staged_file(table, wap_id))
+        return sid
+
+    def abort_staged(self, table: str, wap_id: str) -> None:
+        """Drop a staged commit: nothing was ever visible, nothing remains."""
+        shutil.rmtree(self._staged(table, wap_id)["dir"], ignore_errors=True)
+        os.remove(self._staged_file(table, wap_id))
+
+    def _staged_data_dirs(self, table: str) -> set[str]:
+        out = set()
+        for wap_id in self.staged_ids(table):
+            # a staged file may vanish mid-scan (concurrent publish/abort)
+            with contextlib.suppress(FileNotFoundError):
+                out.add(os.path.normpath(self._staged(table, wap_id)["dir"]))
+        return out
 
     # ------------------------------------------------- exactly-once txns
     def _txn_file(self, table: str) -> str:
@@ -311,9 +425,16 @@ class Catalog:
         return self._data_files(self._snapshot(table))
 
     def compact(
-        self, spark: SparkSession, table: str, target_file_bytes: int = 128 << 20
+        self,
+        spark: SparkSession,
+        table: str,
+        target_file_bytes: int = 128 << 20,
+        sort_by: list[str] | None = None,
     ) -> int:
         """Bin-pack the current snapshot into ~target-sized files.
+
+        With ``sort_by``, files are range-partitioned and sorted on
+        those columns, so their footer min/max ranges are disjoint.
 
         Returns the new snapshot id.  Old snapshots remain readable via
         ``read(snapshot=...)`` until ``expire_snapshots`` drops them.
@@ -328,31 +449,79 @@ class Catalog:
         total = sum(os.path.getsize(f) for f in self._data_files(cur))
         n_files = max(1, -(-total // target_file_bytes))
         df = self._assemble(spark, cur)
-        data_dir = self._new_data_dir(table, "c")
         part_by = cur.get("partition_by") or []
-        # repartition bounds files-per-task at 1; with partition
-        # columns in the hash the rows of one partition land in few
-        # tasks, so a partitioned table compacts to <= n_files files
-        # per partition value rather than n_files * n_partitions.
-        out = (
-            df.repartition(int(n_files), *part_by)
-            if part_by
-            else df.repartition(int(n_files))
+        if sort_by:
+            out = df.repartitionByRange(int(n_files), *sort_by).sortWithinPartitions(
+                *part_by, *sort_by
+            )
+        else:
+            # repartition bounds files-per-task at 1; with partition
+            # columns in the hash the rows of one partition land in few
+            # tasks, so a partitioned table compacts to <= n_files files
+            # per partition value rather than n_files * n_partitions.
+            out = (
+                df.repartition(int(n_files), *part_by)
+                if part_by
+                else df.repartition(int(n_files))
+            )
+        return self._commit_rewrite(
+            table, snaps, out, "replace", "c", sort_by=sort_by or []
         )
-        writer = out.write.mode("overwrite")
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(data_dir)
+
+    def _commit_rewrite(self, table: str, snaps: list[dict], df: DataFrame,
+                        operation: str, hint: str, **extra) -> int:
+        """Write ``df`` as the one dir of the snapshot after ``snaps[-1]``.
+        No retry: the rewrite was computed against ``snaps[-1]``, so a
+        concurrent commit surfaces as :class:`CommitConflict`."""
+        cur = snaps[-1]
+        data_dir = self._new_data_dir(table, hint)
+        part_by = cur.get("partition_by") or []
+        self._write(df, data_dir, part_by)
         manifest = {
             "id": cur["id"] + 1,
             "parent": cur["id"],
             "dirs": [data_dir],
             "partition_by": part_by,
             "schema": cur.get("schema") or df.schema.jsonValue(),
-            "operation": "replace",
+            "operation": operation,
             "txn_ids": self._carried_txns(snaps),
+            **extra,
         }
         return self._commit_manifest(table, manifest)
+
+    def merge(
+        self, spark: SparkSession, table: str, source: DataFrame, on: list[str]
+    ) -> int:
+        """Copy-on-write upsert of ``source`` into ``table`` keyed on
+        ``on`` (MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT),
+        committed as an "overwrite" snapshot; raises
+        :class:`CommitConflict` like ``compact``.
+
+        Source must be unique on ``on`` (SQL MERGE raises when a target
+        row matches several source rows) and carry exactly the target's
+        columns (extra ones would be silently dropped)."""
+        snaps = self.snapshots(table)
+        if not snaps:
+            raise FileNotFoundError(f"table {table!r} has no snapshots")
+        target = self._assemble(spark, snaps[-1])
+        extra = set(source.columns) - set(target.columns)
+        if extra:
+            raise ValueError(
+                f"merge source has columns absent from target {table!r}: "
+                f"{sorted(extra)} — add them via schema evolution first"
+            )
+        missing = set(target.columns) - set(source.columns)
+        if missing:
+            raise ValueError(f"merge source is missing target columns: {sorted(missing)}")
+        if source.groupBy(*on).count().where(F.col("count") > 1).limit(1).count():
+            raise ValueError(
+                f"merge source has duplicate rows on key {on} — SQL MERGE "
+                "semantics forbid multiple matches per target row"
+            )
+        # key-only anti-join side: a small source is broadcast
+        merged = target.join(source.select(*on).distinct(), on=on, how="left_anti")
+        merged = merged.unionByName(source.select(*target.columns))
+        return self._commit_rewrite(table, snaps, merged, "overwrite", "w")
 
     def expire_snapshots(
         self, table: str, keep_last: int = 1, orphan_grace_s: float = 86400.0
@@ -398,8 +567,11 @@ class Catalog:
         # since the first read (concurrent append/compact that won its
         # CAS while we were planning) keeps every dir it references
         seen_ids = {s["id"] for s in snaps}
-        keep_dirs = _snap_dirs(retained) | _snap_dirs(
-            [s for s in self.snapshots(table) if s["id"] not in seen_ids]
+        # staged-but-unpublished WAP dirs are live, not orphans
+        keep_dirs = (
+            _snap_dirs(retained)
+            | self._staged_data_dirs(table)
+            | _snap_dirs([s for s in self.snapshots(table) if s["id"] not in seen_ids])
         )
         expired_dirs = _snap_dirs(expired)
         now = time.time()
@@ -427,3 +599,43 @@ class Catalog:
             except FileNotFoundError:
                 pass
         return deleted
+
+    def read_incremental(
+        self,
+        spark: SparkSession,
+        table: str,
+        since_snapshot: int,
+        to_snapshot: int | None = None,
+    ) -> DataFrame:
+        """Rows appended after ``since_snapshot`` up to ``to_snapshot``
+        (default: current) — Iceberg's incremental append scan.
+        ``since_snapshot=-1`` means from the start.  Replace
+        (compaction) snapshots add no rows and are skipped; the delta
+        across an overwrite (``merge``) or an expired part of the chain
+        is undefined, so either raises ValueError."""
+        snaps = {s["id"]: s for s in self.snapshots(table)}
+        if not snaps:
+            raise FileNotFoundError(f"table {table!r} has no snapshots")
+        to = max(snaps) if to_snapshot is None else to_snapshot
+        prev = [] if since_snapshot < 0 else snaps.get(since_snapshot, {}).get("dirs")
+        added: list[str] = []
+        for sid in range(since_snapshot + 1, to + 1):
+            snap = snaps.get(sid)
+            if snap is None or prev is None:
+                gone = since_snapshot if prev is None else sid
+                raise ValueError(f"snapshot {gone} of {table!r} has been expired; "
+                                 "incremental read impossible — run a full read")
+            op = snap.get("operation", "append")
+            if op == "overwrite":
+                raise ValueError(f"snapshot {sid} of {table!r} is an overwrite; "
+                                 "incremental append read impossible across it")
+            if op == "append":
+                added.extend(d for d in snap["dirs"] if d not in prev)
+            prev = snap["dirs"]
+        if not added:
+            schema = (snaps.get(to) or snaps[max(snaps)])["schema"]
+            return spark.createDataFrame([], StructType.fromJson(schema))
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [spark.read.parquet(d) for d in added],
+        )

@@ -1,13 +1,12 @@
-"""Sort-order / Z-order compaction = data skipping at scan time.
+"""Sort-order compaction = data skipping at scan time.
 
 Parquet files carry per-column min/max footer stats; Spark (and
 Iceberg's file-level stats) skip a file or row group whose range
 cannot satisfy the predicate.  That only helps if the layout CLUSTERS
-values — a file whose ids span the whole domain prunes nothing.  These
-tests prove the clustering property directly from the parquet footers:
+values — a file whose ids span the whole domain prunes nothing.  This
+test proves the clustering property directly from the parquet footers:
 after ``compact(sort_by=...)`` the per-file ranges are pairwise
-disjoint, and after ``compact(zorder_by=[x, y])`` each file covers a
-small bounding box in (x, y) space instead of the whole domain.
+disjoint.
 """
 
 from __future__ import annotations
@@ -16,7 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from qfilter.catalog import Catalog, zorder_expr
+from qfilter.catalog import Catalog
 
 
 @pytest.fixture()
@@ -71,66 +70,4 @@ def test_sort_compaction_disjoint_file_ranges(spark, cat):
     for (lo1, hi1), (lo2, hi2) in zip(post, post[1:]):
         assert hi1 < lo2
     assert _hash(cat.read(spark, "t")) == before
-    assert cat.current_snapshot("t")["sort_by"] == ["id"]
-
-
-def test_zorder_expr_matches_scalar_morton(spark):
-    """Bit-interleave correctness: the Catalyst expression equals a
-    scalar Morton computation that applies the identical IEEE-double
-    quantization."""
-    rows = [(x, y) for x in range(4) for y in range(4)]
-    df = spark.createDataFrame(rows, "x int, y int")
-    bits, top = 2, 3
-
-    def scalar(v, mn=0.0, mx=3.0):
-        q = int(min(float(top), max(0.0, (v - mn) / (mx - mn) * top)))
-        return q
-
-    def morton(x, y):
-        qx, qy = scalar(x), scalar(y)
-        z = 0
-        for b in range(bits):
-            z |= ((qx >> b) & 1) << (2 * b)
-            z |= ((qy >> b) & 1) << (2 * b + 1)
-        return z
-
-    got = {
-        (r["x"], r["y"]): r["z"]
-        for r in df.withColumn("z", zorder_expr(spark, df, ["x", "y"], bits=bits)).collect()
-    }
-    for x, y in rows:
-        assert got[(x, y)] == morton(x, y), (x, y)
-
-
-def test_zorder_compaction_shrinks_bounding_boxes(spark, cat):
-    # 32x32 grid, appended hash-shuffled: each file's (x, y) bounding
-    # box is ~the whole domain.  Z-order clustering shrinks each file
-    # to ~a quadrant, so predicates on EITHER x or y skip files.
-    side = 32
-    rows = [(x, y, x * side + y) for x in range(side) for y in range(side)]
-    df = spark.createDataFrame(rows, "x int, y int, payload int").repartition(4, "payload")
-    cat.append("g", df)
-    before = _hash(cat.read(spark, "g"))
-
-    def areas(files):
-        xs = _file_ranges(files, "x")
-        ys = _file_ranges(files, "y")
-        dom = (side - 1) ** 2
-        return [
-            ((hx - lx) * (hy - ly)) / dom
-            for (lx, hx), (ly, hy) in zip(xs, ys)
-        ]
-
-    pre = areas(cat.table_data_files("g"))
-    assert min(pre) > 0.9  # unclustered: every file covers the domain
-
-    cat.compact(spark, "g", target_file_bytes=1 << 10, zorder_by=["x", "y"])
-    files = cat.table_data_files("g")
-    assert len(files) >= 3
-    post = areas(files)
-    assert max(post) < 0.6  # no file spans the domain any more
-    assert sum(post) / len(post) <= 0.4  # mean ~ quadrant-sized
-    assert _hash(cat.read(spark, "g")) == before
-    assert cat.current_snapshot("g")["zorder_by"] == ["x", "y"]
-    # the helper z column never leaks into the table
-    assert all(not c.startswith("__z_") for c in cat.read(spark, "g").columns)
+    assert cat.snapshots("t")[-1]["sort_by"] == ["id"]

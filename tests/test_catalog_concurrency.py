@@ -1,16 +1,16 @@
-"""Optimistic-concurrency commits, and the GC and read checks that
-keep a table whole under them.
+"""Optimistic-concurrency commits, copy-on-write MERGE, and the GC and
+read checks that keep a table whole under them.
 
 On a 1000-executor deployment many jobs append to the same table at
 once (parallel ingest waves, a streaming sink, a backfill).  Iceberg
 serializes them with an atomic compare-and-swap on the snapshot id:
 losers rebase and retry.  This catalog implements the same CAS with a
 create-if-absent hard link on the manifest; ``append`` retries
-automatically (appends commute), while ``compact`` raises
-:class:`CommitConflict` because its rewrite was computed against a
+automatically (appends commute), while ``compact``/``merge`` raise
+:class:`CommitConflict` because their rewrite was computed against a
 stale snapshot and blindly retrying would drop the concurrent writer's
-rows.  ``expire_snapshots`` must never delete a dir a concurrent
-writer is about to commit or has just committed.
+rows.  ``expire_snapshots`` must never delete a dir a concurrent writer
+is about to commit or has just committed.
 """
 
 from __future__ import annotations
@@ -90,7 +90,46 @@ def test_compact_refuses_to_drop_concurrent_append(spark, cat, monkeypatch):
     assert cat.read(spark, "c").count() == 30
 
 
-# ------------------------------------------------------------ expiry GC
+# ------------------------------------------------- copy-on-write MERGE
+
+def test_merge_upsert_semantics(spark, cat):
+    cat.append("m", _mk(spark, 0, 10, tag="old"))
+    pre_sid = cat.snapshots("m")[-1]["id"]
+    src = _mk(spark, 5, 15, tag="new")  # 5-9 update, 10-14 insert
+
+    cat.merge(spark, "m", src, on=["id"])
+    rows = {r["id"]: r["tag"] for r in cat.read(spark, "m").collect()}
+    assert len(rows) == 15
+    assert all(rows[i] == "old" for i in range(0, 5))
+    assert all(rows[i] == "new" for i in range(5, 15))
+    # time travel: pre-merge snapshot still shows the old rows
+    old = cat.read(spark, "m", snapshot=pre_sid)
+    assert old.count() == 10
+    assert {r["tag"] for r in old.collect()} == {"old"}
+    assert cat.snapshots("m")[-1]["operation"] == "overwrite"
+
+
+def test_incremental_read_refuses_overwrite(spark, cat):
+    cat.append("x", _mk(spark, 0, 10))      # snapshot 0
+    cat.append("x", _mk(spark, 10, 20))     # snapshot 1
+    cat.merge(spark, "x", _mk(spark, 0, 2, tag="upd"), on=["id"])  # snapshot 2
+    # the delta across an overwrite is undefined -> hard error, exactly
+    # like Iceberg's incremental append scan
+    with pytest.raises(ValueError, match="overwrite"):
+        cat.read_incremental(spark, "x", since_snapshot=0)
+    # but a window that stops before the overwrite still works
+    inc = cat.read_incremental(spark, "x", since_snapshot=0, to_snapshot=1)
+    assert sorted(r["id"] for r in inc.collect()) == list(range(10, 20))
+
+
+def test_merge_then_expire_gc(spark, cat):
+    cat.append("e", _mk(spark, 0, 10))
+    cat.merge(spark, "e", _mk(spark, 0, 5, tag="v2"), on=["id"])
+    before = cat.read(spark, "e").count()
+    deleted = cat.expire_snapshots("e", keep_last=1)
+    assert len(deleted) == 1  # the pre-merge append dir
+    assert cat.read(spark, "e").count() == before
+
 
 def test_expire_never_deletes_concurrently_committed_dirs(spark, cat):
     """The GC race ADVICE flagged: a writer commits BETWEEN the
@@ -135,6 +174,23 @@ def test_expire_spares_fresh_orphan_by_default(spark, cat, tmp_path):
     os.utime(pending, (old, old))
     deleted = cat.expire_snapshots("t", keep_last=1)
     assert deleted == [os.path.normpath(pending)]
+
+
+def test_merge_rejects_duplicate_source_keys(spark, cat):
+    cat.append("t", _mk(spark, 0, 10))
+    dup_src = _mk(spark, 0, 3).unionByName(_mk(spark, 2, 3, tag="twin"))
+    with pytest.raises(ValueError, match="duplicate"):
+        cat.merge(spark, "t", dup_src, on=["id"])
+
+
+def test_merge_rejects_schema_drift(spark, cat):
+    cat.append("t", _mk(spark, 0, 10))
+    wide = _mk(spark, 0, 3).withColumn("extra", F.lit(1))
+    with pytest.raises(ValueError, match="absent from target"):
+        cat.merge(spark, "t", wide, on=["id"])
+    narrow = _mk(spark, 0, 3).drop("tag")
+    with pytest.raises(ValueError, match="missing target columns"):
+        cat.merge(spark, "t", narrow, on=["id"])
 
 
 def test_corrupt_data_file_surfaces_not_silently_empty(spark, cat):

@@ -1,11 +1,13 @@
 """Iceberg-analog table maintenance: compaction, snapshot expiry,
-schema and partition evolution on read.
+incremental append scans.
 
 Why this matters at 100 TB: every pipeline wave and every streaming
 micro-commit appends one snapshot dir; after 10^4 commits the table is
 10^6+ small files and scans die on file-open overhead.  Compaction
-(Iceberg rewrite_data_files) bin-packs the current snapshot, and expiry
-(expireSnapshots + orphan GC) reclaims the superseded bytes.
+(Iceberg rewrite_data_files) bin-packs the current snapshot, expiry
+(expireSnapshots + orphan GC) reclaims the superseded bytes, and the
+incremental scan lets downstream consumers read only the appended rows
+instead of rescanning the table per run.
 """
 
 from __future__ import annotations
@@ -114,6 +116,40 @@ def test_expire_snapshots_gc(spark, cat):
     # expired snapshots are gone — time travel to them now fails
     with pytest.raises(ValueError, match="does not exist"):
         cat.read(spark, "e", snapshot=0)
+
+
+def test_incremental_read_appends_only(spark, cat):
+    cat.append("i", _mk(spark, 0, 10))      # snapshot 0
+    cat.append("i", _mk(spark, 10, 30))     # snapshot 1
+    cat.compact(spark, "i", 1 << 30)        # snapshot 2 (replace — no new rows)
+    cat.append("i", _mk(spark, 30, 35))     # snapshot 3
+
+    inc = cat.read_incremental(spark, "i", since_snapshot=0)
+    got = sorted(r["id"] for r in inc.collect())
+    assert got == list(range(10, 30)) + list(range(30, 35))
+
+    # bounded window: only snapshot 1's rows
+    inc01 = cat.read_incremental(spark, "i", since_snapshot=0, to_snapshot=1)
+    assert sorted(r["id"] for r in inc01.collect()) == list(range(10, 30))
+
+    # since == current -> empty, with the table's schema
+    cur = cat.snapshots("i")[-1]["id"]
+    empty = cat.read_incremental(spark, "i", since_snapshot=cur)
+    assert empty.count() == 0
+    assert set(empty.columns) == {"id", "bucket", "caption"}
+
+    # since=-1 -> everything
+    allrows = cat.read_incremental(spark, "i", since_snapshot=-1)
+    assert allrows.count() == 35
+
+
+def test_incremental_read_refuses_expired_chain(spark, cat):
+    cat.append("x", _mk(spark, 0, 10))
+    cat.append("x", _mk(spark, 10, 20))
+    cat.compact(spark, "x", 1 << 30)
+    cat.expire_snapshots("x", keep_last=1)
+    with pytest.raises(ValueError, match="expired"):
+        cat.read_incremental(spark, "x", since_snapshot=0)
 
 
 def test_add_column_schema_evolution(spark, cat):

@@ -36,20 +36,6 @@ def _mk(spark, lo, hi):
     )
 
 
-def test_staged_rows_are_invisible_until_published(spark, cat):
-    cat.append("t", _mk(spark, 0, 100))
-    wap = cat.append_staged("t", _mk(spark, 100, 150))
-    assert cat.read(spark, "t").count() == 100          # readers see nothing
-    assert cat.read_staged(spark, "t", wap).count() == 150  # audit sees all
-    sid = cat.publish_staged("t", wap)
-    assert cat.read(spark, "t").count() == 150
-    assert cat.current_snapshot("t")["id"] == sid
-    assert cat.staged_ids("t") == []
-    # published commit carries stats: scan planning prunes immediately
-    _, kept, total = cat.plan_scan("t", [("id", ">=", 140)])
-    assert 0 < kept < total
-
-
 def test_abort_leaves_no_trace(spark, cat):
     cat.append("t", _mk(spark, 0, 50))
     before = _hash(cat.read(spark, "t"))
